@@ -25,6 +25,8 @@ true pair exactly once — no dedup pass needed.  Refinement uses
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -38,9 +40,21 @@ _PREDICATES = ("covers", "contains")
 # Per-worker-process cache of built ZoneIndex objects.  Python workers
 # are reused across tasks (spark.python.worker.reuse), so the index
 # build — the dominant per-task cost at high parallelism — happens once
-# per executor worker instead of once per task.  Bounded LRU-ish.
+# per executor worker and zone layer (``_index_token``) instead of once
+# per task.  Bounded LRU-ish.
 _INDEX_CACHE: dict[str, "ZoneIndex"] = {}
 _INDEX_CACHE_MAX = 4
+
+
+def _index_token(zrows, res: int | None) -> str:
+    """Cache key of the index built from ``zrows`` at ``res``: a digest
+    of the zones themselves, so repeated calls over the same zone layer
+    reuse each worker's index instead of rebuilding it per call."""
+    h = hashlib.sha256(repr(res).encode())
+    for zid, buf in zrows:
+        h.update(f"|{zid}:{len(buf)}|".encode())
+        h.update(buf)
+    return h.hexdigest()
 
 
 def _cached_index(token: str, build) -> "ZoneIndex":
@@ -240,13 +254,11 @@ def pip_join_broadcast(
     """
     if point_cols is None:
         point_cols = [c for c in points.columns if c not in (x, y)]
-    import uuid
-
     spark = points.sparkSession
     zrows = [(r[zone_id], bytes(r[geometry])) for r in
              zones.select(zone_id, geometry).collect()]
     bc = spark.sparkContext.broadcast((zrows, res))
-    token = uuid.uuid4().hex  # cache key: one index per operator call
+    token = _index_token(zrows, res)
     schema = _point_schema(points, point_cols)
     src = points.select(*point_cols, x, y).where(
         F.col(x).isNotNull() & F.col(y).isNotNull()
@@ -291,15 +303,13 @@ def pip_count_by_zone(
     identical match semantics to :func:`pip_join_broadcast`, minus the
     materialized pair stream nobody aggregates twice.
     """
-    import uuid
-
     import pyarrow as pa
 
     spark = points.sparkSession
     zrows = [(r[zone_id], bytes(r[geometry])) for r in
              zones.select(zone_id, geometry).collect()]
     bc = spark.sparkContext.broadcast((zrows, res))
-    token = uuid.uuid4().hex
+    token = _index_token(zrows, res)
     src = points.select(x, y).where(
         F.col(x).isNotNull() & F.col(y).isNotNull()
     )

@@ -27,7 +27,7 @@ __all__ = ["read_asc", "write_asc"]
 
 
 def read_asc(path: str) -> tuple[np.ndarray, tuple, float | None]:
-    """→ (array[h,w] float64 (or int if every token is integral),
+    """→ (array[h,w] float64 (or int64 if every token is an integer),
     geotransform, nodata)."""
     with open(path, "rb") as f:
         raw = f.read()
@@ -39,7 +39,8 @@ def read_asc(path: str) -> tuple[np.ndarray, tuple, float | None]:
     # token that is a bare number in name position
     while i + 1 < len(tokens):
         name = tokens[i].lower()
-        if not name[:1].isalpha():  # data values start with digit/+-/.
+        # data values start with a digit/+-/. or are a bare nan/inf
+        if not name[:1].isalpha() or name in ("nan", "inf", "infinity"):
             break
         hdr[name] = float(tokens[i + 1])
         i += 2
@@ -67,8 +68,11 @@ def read_asc(path: str) -> tuple[np.ndarray, tuple, float | None]:
             f"AAIGrid data has {len(vals)} values, expected {w * h}"
         )
     arr = np.array(vals, dtype=np.float64).reshape(h, w)
-    if all("." not in v and "e" not in v and "E" not in v for v in vals):
-        arr = arr.astype(np.int32)
+    if all(v.lstrip("+-").isdigit() for v in vals):
+        try:  # parsed as int64, not via float64 + downcast: no wrap
+            arr = np.array(vals, dtype=np.int64).reshape(h, w)
+        except OverflowError:  # beyond int64: keep the float64 reading
+            pass
     gt = (xll, cs, 0.0, yll + h * cs, 0.0, -cs)
     return arr, gt, nodata
 

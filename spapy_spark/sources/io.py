@@ -60,6 +60,8 @@ def tiles_from_array(
                      sub.tobytes())
                 )
     df = spark.createDataFrame(rows, schema=RASTER_SCHEMA)
+    if not rows:  # zero-size array: an empty tile table
+        return df
     return df.repartition(
         min(len(rows), spark.sparkContext.defaultParallelism)
     )

@@ -19,6 +19,8 @@ driver.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 
@@ -194,11 +196,13 @@ ZONES_SCHEMA = (
 )
 
 
-def _zone_rows(n_zones: int = 200) -> list[tuple]:
+@functools.lru_cache(maxsize=8)
+def _zone_rows(n_zones: int = 200) -> tuple[tuple, ...]:
     """Driver-side zone synthesis (small layer, broadcast at join time).
 
     200 convex jittered n-gons over the city-cluster region, 5 giant
-    background boxes, 3 MultiPolygons, 1 polygon with a hole.
+    background boxes, 3 MultiPolygons, 1 polygon with a hole. Memoized:
+    the rows depend only on ``n_zones``.
     """
     rows = []
     ids = np.arange(n_zones, dtype=np.int64)
@@ -246,7 +250,7 @@ def _zone_rows(n_zones: int = 200) -> list[tuple]:
         holes=[[[139.5, 35.4], [139.9, 35.4], [139.9, 35.9], [139.5, 35.9]]],
     )
     rows.append((nid, f"zone_{nid}", nid % 10, _pop_est(nid), wkb.dumps(hole)))
-    return rows
+    return tuple(rows)
 
 
 def _pop_est(zone_id: int) -> float:
@@ -254,7 +258,9 @@ def _pop_est(zone_id: int) -> float:
 
 
 def zones(spark, n_zones: int = 200):
-    return spark.createDataFrame(_zone_rows(n_zones), schema=ZONES_SCHEMA)
+    # from pandas, the rows go through Arrow into a local relation: a
+    # later collect() reads them on the driver without a Spark job
+    return spark.createDataFrame(zones_pdf(n_zones), schema=ZONES_SCHEMA)
 
 
 def zones_pdf(n_zones: int = 200) -> pd.DataFrame:

@@ -2,6 +2,8 @@
 nested loop, /root/reference/SpaVectors.py:939-983) reimplemented over
 the synthetic fixtures — exact row-set match (SURVEY.md §5.3)."""
 
+import collections
+
 import numpy as np
 import pytest
 
@@ -67,6 +69,42 @@ def test_pip_broadcast_matches_brute_force(spark, world, oracle_pairs):
     pts = geocode.geocode_coords(docs).where("lat is not null")
     out = pip.pip_join_broadcast(pts, zdf, point_cols=["url"])
     assert spark_pairs(out) == oracle_pairs
+
+
+def test_pip_count_matches_brute_force_across_zone_layers(spark, world, oracle_pairs):
+    """Calls over two different zone layers in one session each probe
+    their own index: workers cache indexes by zone content, so a
+    repeated layer reuses one and a different layer never does."""
+    docs, zdf = world
+    pts = geocode.geocode_coords(docs).where("lat is not null")
+    even = zdf.where("zone_id % 2 = 0")
+    for zones, keep in ((zdf, lambda z: True), (even, lambda z: z % 2 == 0),
+                        (zdf, lambda z: True)):
+        want = collections.Counter(z for _, z in oracle_pairs if keep(z))
+        got = {r["zone_id"]: r["n_docs"]
+               for r in pip.pip_count_by_zone(pts, zones).collect()}
+        assert got == dict(want)
+
+
+def test_index_token_keys_zone_content():
+    zrows = [(r[0], r[4]) for r in synth._zone_rows(20)]
+    tok = pip._index_token(zrows, None)
+    assert tok == pip._index_token([(z, bytes(g)) for z, g in zrows], None)
+    assert tok != pip._index_token(zrows, 6)
+    assert tok != pip._index_token(zrows[:-1], None)
+    renumbered = zrows[:-1] + [(zrows[-1][0] + 1000, zrows[-1][1])]
+    assert tok != pip._index_token(renumbered, None)
+
+
+def test_zones_is_a_local_relation_of_the_synthesized_rows(spark):
+    zdf = synth.zones(spark)
+    assert zdf.schema.simpleString() == (
+        "struct<zone_id:bigint,name:string,labelrank:bigint,"
+        "pop_est:double,geometry:binary>"
+    )
+    # collect() reads a local relation on the driver, no Spark job
+    assert "LocalRelation" in zdf._jdf.queryExecution().optimizedPlan().toString()
+    assert [tuple(r) for r in zdf.collect()] == list(synth._zone_rows(200))
 
 
 def test_pip_cells_matches_brute_force(spark, world, oracle_pairs):

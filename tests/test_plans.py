@@ -65,6 +65,34 @@ def test_geocode_stays_jvm_side(spark):
     assert "PushedFilters" in plan
 
 
+def test_geocode_regex_once_per_row(spark):
+    """The coordinate regex appears once in the executed flagship plan:
+    the caller's lat filter stays above it, never in a Filter or in the
+    scan's DataFilters (each a separate regex evaluation per row)."""
+    from spapy_spark.operators import geocode
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    geo = geocode.geocode_coords(docs).where(F.col("lat").isNotNull())
+    plan = _plan(geo.select("lat", "lon"))
+    assert plan.count("regexp_") == 1, plan
+    for line in plan.splitlines():
+        if "Filter" in line:
+            assert "regexp_" not in line, line
+
+
+def test_geocode_keeps_later_filters_pushed(spark):
+    """A filter on an input column applied after geocoding still reaches
+    the parquet scan."""
+    from spapy_spark.operators import geocode
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    geo = geocode.geocode_coords(docs).where(F.col("lat").isNotNull())
+    plan = _plan(geo.where(F.col("lang") == "en").select("doc_id", "lat"))
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l][0]
+    assert "EqualTo(lang,en)" in pushed.replace(" ", "")
+    assert plan.count("regexp_") == 1, plan
+
+
 def test_pip_probe_is_arrow_not_pandas(spark):
     """The PIP probe runs as a single Arrow-native python map stage
     directly over the pruned scan (no extra exchange before it)."""

@@ -63,6 +63,27 @@ def test_asc_rejects_non_square_cells(tmp_path):
                           geotransform=(0, 1, 0, 0, 0, -2))
 
 
+def test_asc_integral_grid_beyond_int32_does_not_wrap(tmp_path):
+    arr = np.array([[3_000_000_000, -5], [2**53 + 1, 7]], dtype=np.int64)
+    p = str(tmp_path / "big.asc")
+    aaigrid.write_asc(p, arr)
+    back, _, _ = aaigrid.read_asc(p)
+    assert back.dtype == np.int64
+    np.testing.assert_array_equal(back, arr)  # exact, no float64 detour
+
+
+def test_asc_leading_nan_token_is_data(tmp_path):
+    p = str(tmp_path / "nan.asc")
+    with open(p, "w") as f:
+        f.write("ncols 3\nnrows 1\nxllcorner 0\nyllcorner 0\n"
+                "cellsize 1\nnan 5 inf\n")
+    back, gt, nd = aaigrid.read_asc(p)
+    assert back.dtype == np.float64 and back.shape == (1, 3)
+    assert np.isnan(back[0, 0]) and back[0, 1] == 5.0
+    assert back[0, 2] == np.inf
+    assert gt == (0.0, 1.0, 0.0, 1.0, 0.0, -1.0) and nd is None
+
+
 # ---------------------------------------------------------------------------
 # write_raster extension map
 # ---------------------------------------------------------------------------
@@ -150,6 +171,14 @@ def test_read_any_dispatches_images_and_asc(spark, tmp_path):
     got2 = _tiles_to_array(io.read_any(spark, a).collect())
     assert got2.shape == (1, 4, 4)
     assert (got2 == 7.0).all()
+
+
+def test_tiles_from_array_zero_size_is_empty_table(spark):
+    want = io.tiles_from_array(spark, np.zeros((1, 1), np.float32)).schema
+    for shape in ((0, 5), (2, 0, 3)):
+        df = io.tiles_from_array(spark, np.zeros(shape, np.float32))
+        assert df.schema == want
+        assert df.count() == 0
 
 
 def test_read_any_unknown_ext_raises(spark):
@@ -313,9 +342,13 @@ def test_gpb_header_variants():
             + st.pack("<4d", 1, 1, 2, 2) + w)
     assert geopackage.gpb_to_wkb(blob) == w
     assert geopackage.gpb_to_wkb(None) is None
-    # empty-geometry flag
-    blob_e = b"GP" + bytes([0, 0x21]) + st.pack("<i", 0) + w
+    # empty-geometry flag is bit 4 (0x10), spec §2.1.3.1
+    blob_e = b"GP" + bytes([0, 0x11]) + st.pack("<i", 0) + w
     assert geopackage.gpb_to_wkb(blob_e) is None
+    # bit 5 (0x20) marks ExtendedGeoPackageBinary, not an empty geometry
+    blob_x = b"GP" + bytes([0, 0x21]) + st.pack("<i", 0) + w
+    with pytest.raises(NotImplementedError, match="extended"):
+        geopackage.gpb_to_wkb(blob_x)
     with pytest.raises(ValueError, match="magic"):
         geopackage.gpb_to_wkb(b"XX" + blob[2:])
 
@@ -399,6 +432,52 @@ def test_gpkg_rtree_bbox_pushdown(spark, tmp_path):
     assert got_plain == exp
     # no bbox → everything, index or not
     assert geopackage.read_geopackage(spark, p_idx).count() == 200
+
+
+def test_gpkg_rtree_hits_refined_exactly(spark, tmp_path):
+    """The R*Tree stores outward-rounded float32 bounds: a feature whose
+    double envelope ends just left of the bbox is an index hit, and must
+    still be dropped, as it is when the file has no index."""
+    eps = 1e-9
+    pdf = pd.DataFrame({
+        "name": ["near", "inside"],
+        "geometry": [wkb.dumps(_poly(0.0, 0.0, 1.0 + eps)),
+                     wkb.dumps(_poly(1.5, 0.0))],
+    })
+    box = (1.0 + 2 * eps, 0.0, 3.0, 1.0)
+    got = {}
+    for index in (True, False):
+        p = str(tmp_path / f"eps_{index}.gpkg")
+        geopackage.write_geopackage(pdf, p, spatial_index=index)
+        got[index] = sorted(r["name"] for r in geopackage.read_geopackage(
+            spark, p, partitions=1, bbox=box).collect())
+    assert got[True] == got[False] == ["inside"]
+
+
+def test_gpkg_rtree_found_by_registry_geometry_column(spark, tmp_path):
+    """A file whose geometry column is not named ``geom`` still has its
+    R*Tree consulted (``rtree_<table>_<column>``)."""
+    pdf = _mk_pdf(30)
+    p = str(tmp_path / "shape.gpkg")
+    geopackage.write_geopackage(pdf, p)
+    con = sqlite3.connect(p)
+    try:
+        con.execute("ALTER TABLE features RENAME COLUMN geom TO shape")
+        con.execute("UPDATE gpkg_geometry_columns SET column_name = 'shape'")
+        con.execute("UPDATE gpkg_extensions SET column_name = 'shape'")
+        con.execute(
+            "ALTER TABLE rtree_features_geom RENAME TO rtree_features_shape"
+        )
+        # f12 (fid 13, box at 2,1) intersects the window; drop it from
+        # the index only, so a result without it proves the index was used
+        con.execute("DELETE FROM rtree_features_shape WHERE id = 13")
+        con.commit()
+    finally:
+        con.close()
+    box = (2.5, 1.5, 3.5, 1.5)  # intersects f12 and f13 only
+    got = {r["name"] for r in geopackage.read_geopackage(
+        spark, p, partitions=2, bbox=box).collect()}
+    assert got == {"f13"}
 
 
 def test_read_any_dispatches_warc(spark, tmp_path):

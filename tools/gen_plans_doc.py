@@ -24,15 +24,20 @@ def main():
         sections.append(f"## {title}\n\n{note}\n\n```\n{plan[:2600]}\n```\n")
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    geo = geocode.geocode_coords(docs.where(F.col("lang") == "en")).where(
-        F.col("lat").isNotNull()
+    geo = geocode.geocode_coords(docs).where(
+        F.col("lat").isNotNull() & (F.col("lang") == "en")
     ).select("doc_id", "lat", "lon")
     cap(
-        "Geocode stage (JVM-only, pushdown)", geo,
-        "The whole geocode stage is Catalyst codegen: the `lang='en'` "
-        "filter is PUSHED to the parquet scan (`PushedFilters`), "
-        "ReadSchema is pruned to the referenced columns, and there is "
-        "**no Python node**.",
+        "Geocode stage (JVM-only, one regex per row, pushdown)", geo,
+        "The whole geocode stage is Catalyst codegen with **no Python "
+        "node**. The coordinate regex is evaluated once per row, in the "
+        "Project under the `Generate inline(...)` that builds lat/lon; "
+        "the caller's `isnotnull(lat)` reads the Generate's output, so "
+        "it stays in the Filter above it and no copy of the regex lands "
+        "in a Filter or the scan's DataFilters. The `lang='en'` filter, "
+        "written after geocoding, still passes the Generate and is "
+        "PUSHED to the parquet scan (`PushedFilters`); ReadSchema is "
+        "pruned to the referenced columns.",
     )
     pts = geo.withColumnRenamed("doc_id", "point_id")
     hits = pip.pip_join_broadcast(pts, synth.zones(spark),

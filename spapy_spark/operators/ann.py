@@ -1,18 +1,19 @@
-"""Approximate nearest-neighbor search over embedding columns.
+"""Cosine nearest-neighbor search over embedding columns.
 
-Two strategies per the training-data-pipeline mandate:
+Two exact top-k plans with one answer (the ``ann_cosine`` and
+``ann_cosine_arrow`` contract queries check both against the same
+oracle):
 
-- ``cosine_topk``    — exact brute-force baseline: broadcast the query
-  set, dot products via posexplode + decimal-exact sums (JVM-side, no
-  Python; bit-reproducible in the DuckDB oracle).
-- ``lsh_cosine_topk``— scale path: deterministic random-hyperplane LSH.
-  A vectorized pandas UDF projects each embedding onto ``n_planes``
-  splitmix-generated hyperplanes → sign-bit bucket; candidates =
-  bucket collisions (multi-probe over exact bucket + 1-bit flips);
-  exact cosine re-rank inside buckets only.
+- ``cosine_topk``       — broadcast the query set, dot products via
+  posexplode + decimal-exact sums (JVM-side, no Python;
+  bit-reproducible in the DuckDB oracle).
+- ``cosine_topk_arrow`` — the production plan: broadcast the query
+  block, one float64 matmul per Arrow batch with a per-batch top-k, so
+  no row inflation and no wide shuffle.
 
-At 10^9+ vectors the LSH path is one narrow projection + one
-equi-join; the brute path is the correctness oracle at test scale.
+``add_lsh_bucket`` appends a deterministic random-hyperplane sign-bit
+bucket (splitmix-generated planes); ``dedup.embedding_near_dup_pairs``
+uses it to limit candidate pairs to bucket collisions.
 """
 
 from __future__ import annotations
@@ -153,126 +154,7 @@ def cosine_topk_arrow(
 
 
 # ---------------------------------------------------------------------------
-# IVF scale path (coarse k-means quantizer + probed exact re-rank)
-# ---------------------------------------------------------------------------
-
-
-def train_ivf_centroids(
-    vectors: DataFrame,
-    n_centroids: int = 16,
-    sample_n: int = 4096,
-    iters: int = 10,
-    vec_col: str = "embedding",
-    seed: int = 1234,
-) -> np.ndarray:
-    """Deterministic spherical k-means on a bounded sample → L2-normal
-    centroid matrix (n_centroids, dim).  The sample/driver step is
-    O(sample_n·dim) regardless of corpus size; assignment and probing
-    run distributed."""
-    rows = vectors.select(vec_col).limit(sample_n).collect()
-    X = np.array([np.asarray(r[0], dtype=np.float64) for r in rows])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    # deterministic init: splitmix-shuffled sample indices
-    order = np.argsort(_mix(np.arange(len(X), dtype=np.uint64)
-                            + np.uint64(seed)))
-    C = X[order[:n_centroids]].copy()
-    for _ in range(iters):
-        a = np.argmax(X @ C.T, axis=1)
-        for c in range(n_centroids):
-            m = X[a == c]
-            if len(m):
-                v = m.sum(axis=0)
-                n = np.linalg.norm(v)
-                if n > 0:
-                    C[c] = v / n
-    return C
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    nprobe: int = 1,
-    vec_col: str = "embedding",
-    out: str = "cluster",
-) -> DataFrame:
-    """Append the (top-``nprobe``) nearest-centroid cluster id(s) —
-    one row per probe (nprobe=1 → plain partition assignment)."""
-    from pyspark.sql.types import ArrayType
-
-    bc = df.sparkSession.sparkContext.broadcast(np.asarray(centroids))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def enc(vs: pd.Series) -> pd.Series:
-        C = bc.value
-        m = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        if len(m) == 0:
-            return pd.Series([], dtype=object)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ C.T
-        top = np.argsort(-sims, axis=1)[:, :nprobe]
-        return pd.Series(list(top.astype(np.int64)))
-
-    probed = df.withColumn("__probes", enc(F.col(vec_col)))
-    return probed.withColumn(out, F.explode("__probes")).drop("__probes")
-
-
-def ivf_cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    seed: int = 1234,
-) -> DataFrame:
-    """IVF approximate top-k: corpus bucketed by nearest centroid
-    (ONE cluster per vector); queries probe their ``nprobe`` nearest
-    centroids; candidates re-ranked by exact cosine computed JVM-SIDE
-    via ``aggregate(zip_with(...))`` — no Python in the re-rank, and
-    the candidate space is |corpus|·nprobe/n_centroids instead of
-    |corpus| (the IVF scale contract).
-    """
-    C = train_ivf_centroids(
-        vectors, n_centroids, vec_col=vec_col, seed=seed
-    )
-    v = ivf_assign(vectors, C, nprobe=1, vec_col=vec_col)
-    q = ivf_assign(queries, C, nprobe=nprobe, vec_col=vec_col)
-    cand = v.join(
-        F.broadcast(q.select(query_id, "cluster",
-                             F.col(vec_col).alias("__qv"))),
-        "cluster",
-    )
-    # JVM-side dot + norms over the zipped float arrays (codegen)
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
-    scored = cand.select(
-        query_id,
-        id_col,
-        (
-            dot(F.col(vec_col), F.col("__qv"))
-            / (
-                F.sqrt(dot(F.col(vec_col), F.col(vec_col)))
-                * F.sqrt(dot(F.col("__qv"), F.col("__qv")))
-            )
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "cosine")
-    )
-
-
-# ---------------------------------------------------------------------------
-# LSH scale path
+# LSH bucketing (candidate generation for dedup.embedding_near_dup_pairs)
 # ---------------------------------------------------------------------------
 
 
@@ -308,61 +190,3 @@ def add_lsh_bucket(
         return pd.Series(signs @ weights)
 
     return df.withColumn(out, enc(F.col(vec_col)))
-
-
-def lsh_cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 12,
-    probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    seed: int = 1234,
-) -> DataFrame:
-    """Approximate top-k: candidates from bucket collisions (with
-    ``probes``-bit multi-probe flips on the query side), exact cosine
-    re-rank within candidates.  Recall grows with probes/planes."""
-    v = add_lsh_bucket(vectors, dim, n_planes, id_col, vec_col, seed=seed)
-    q = add_lsh_bucket(queries, dim, n_planes, query_id, vec_col, seed=seed)
-    # multi-probe: query also probes buckets at hamming distance ≤ probes
-    probe_buckets = [F.col("bucket")]
-    if probes >= 1:
-        probe_buckets += [
-            F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)
-        ]
-    q = q.withColumn("bucket", F.explode(F.array(probe_buckets)))
-    cand = v.join(
-        F.broadcast(q.select(query_id, "bucket",
-                             F.col(vec_col).alias("__qv"))),
-        "bucket",
-    )
-    qe = cand.select(
-        query_id, id_col, F.posexplode("__qv").alias("pos", "qv"),
-    )
-    # (tiny candidate sets — reuse the exact machinery via a self join)
-    ve = cand.select(query_id, id_col,
-                     F.posexplode(vec_col).alias("pos", "vv"))
-    dots = (
-        ve.join(qe, [query_id, id_col, "pos"])
-        .groupBy(query_id, id_col)
-        .agg(
-            F.sum(F.col("qv").cast("double") * F.col("vv").cast("double"))
-            .alias("dot")
-        )
-    )
-    qn = _norms(queries, query_id, vec_col).withColumnRenamed("norm", "qn")
-    vn = _norms(vectors, id_col, vec_col).withColumnRenamed("norm", "vn")
-    cos = (
-        dots.join(F.broadcast(qn), query_id)
-        .join(vn, id_col)
-        .withColumn("cosine", F.col("dot") / (F.col("qn") * F.col("vn")))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        cos.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "cosine")
-    )

@@ -1,21 +1,24 @@
-"""kNN nearest-feature lookup (north-rule operator).
+"""kNN nearest-feature lookup and the distance-within join (north-rule
+operators).
 
 The reference has no kNN at all (its only "nearest" is raster
 resampling, /root/reference/SpaRasters.py:1390); this operator is new
 engine surface mandated by BASELINE.json's north_star ("STRtree-per-
 partition kNN").
 
-Two physical strategies, picked by the size of the feature side:
+Two kNN plans, one answer (the ``knn_sites`` and ``knn_sites_grid``
+contract queries check both against the same oracle):
 
-- ``knn_join_broadcast`` — the feature layer (sites) is small: ship it
-  to every executor and resolve each point batch with one vectorized
-  distance matrix + ``argpartition`` top-k.  No shuffle of the point
-  side; this is the 10^12-doc plan when |sites| is O(10^4..10^5).
-- ``knn_join_cells`` — both sides large: sites are bucketed by Z-order
-  cell (cells.py); each point probes its own cell's bucket and expands
-  k-rings until ``k`` candidates are guaranteed correct (ring distance
-  lower bound exceeds the current k-th best).  Executed as a cell
-  equi-join + grouped refine.
+- ``knn_join_broadcast`` — the site layer is collected and broadcast;
+  each point batch is resolved with a vectorized distance matrix and a
+  site-axis-chunked running top-k.  No shuffle of the point side.
+- ``knn_join_grid_exact`` — pure Catalyst, no Python and no collect:
+  per grid cell the site side keeps only the sites not dominated by k
+  others for every point in the cell; points join their one cell's
+  list and a window takes the top-k.  One shuffle of the point stream.
+
+``within_distance`` is the range join on the same grid: sites bucket
+to one cell, points explode to the cells a radius-``d`` disc touches.
 
 Tie-break is deterministic everywhere: order by (distance, site_id) —
 the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
@@ -24,7 +27,6 @@ the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -32,8 +34,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from .. import cells
 
 
 def _out_schema(points: DataFrame, point_cols: list[str]) -> StructType:
@@ -160,146 +160,18 @@ def knn_join_broadcast(
     return src.mapInPandas(probe, schema=schema)
 
 
-def knn_join_grid(
-    points: DataFrame,
-    sites: DataFrame,
-    k: int = 1,
-    res: int = 6,
-    ring: int = 1,
-    x: str = "lon",
-    y: str = "lat",
-    point_id: str = "point_id",
-    site_id: str = "site_id",
-    sx: str = "x",
-    sy: str = "y",
-    _flags: bool = False,
-) -> DataFrame:
-    """Fully distributed kNN — NO broadcast of the point side, NO
-    Python: the point stream can be arbitrarily large.
-
-    Plan (pure Catalyst, ONE shuffle of the point stream): the
-    neighborhood explosion happens on the SITE side — each site
-    registers in every cell of its Chebyshev ``ring`` neighborhood
-    ((2·ring+1)² rows per site); points keep their single res-``res``
-    cell and are hash-partitioned by it once.  The cell equi-join then
-    pairs a point with exactly the sites within ``ring`` cells
-    (Chebyshev symmetry), and BOTH the per-point top-k window and the
-    optional done-flag window run partitioned by ``(__cell, point_id)``
-    — the point's cell is functionally a prefix of its id's partition,
-    so Catalyst proves the existing hash distribution satisfies the
-    window and inserts no further Exchange.  The r3 plan exploded the
-    POINT side (2·ring+1)²× before the join; for a 10⁹-row point stream
-    at ring 2 that is a 25× shuffle amplification — moving the
-    explosion to the (static, usually far smaller) site side makes the
-    shuffled volume |points| + (2·ring+1)²·|sites| instead.
-
-    Output adds ``certain``: true iff the k-th distance is below
-    ``ring × min(cell_w, cell_h)`` — the geometric guarantee that no
-    site outside the searched neighborhood can beat it.  Callers
-    escalate ``ring`` (or fall back to the broadcast path) for the
-    usually-tiny uncertain remainder.  With ``_flags`` the per-point
-    ``__nk`` (rows found) and ``__allc`` (all-certain) columns are
-    folded into the same exchange-free window pass — the escalation
-    wrapper's bookkeeping costs zero extra shuffles.
-    """
-    from pyspark.sql import Window
-
-    n = 1 << res
-    cell_w, cell_h = 360.0 / n, 180.0 / n
-    ring_eff = min(ring, n - 1)
-    covering = ring_eff >= n - 1
-    bound = ring_eff * min(cell_w, cell_h)
-
-    def cell_ij(lon_c, lat_c):
-        ix = F.least(
-            F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        iy = F.least(
-            F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        return ix, iy
-
-    # site side: quantize ONCE, then explode compact Δ sequences —
-    # keeps the Catalyst expression tree O(1) in ``ring``.  Lat rows
-    # outside the grid are dropped; lon wraps via pmod.  When the ring
-    # spans the whole lon axis the Δx range collapses to [0, n) so the
-    # wrap cannot register a site in the same cell twice (the r3
-    # point-exploded form had a latent duplicate-candidate bug here).
-    s_ix, s_iy = cell_ij(F.col(sx), F.col(sy))
-    dx_lo, dx_hi = (0, n - 1) if 2 * ring_eff + 1 >= n else (-ring_eff, ring_eff)
-    s = (
-        sites.select(
-            F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
-            F.col(sy).alias("__sy"),
-            s_ix.alias("__six"), s_iy.alias("__siy"),
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(-ring_eff), F.lit(ring_eff))).alias("__dy")
-        )
-        .where(
-            ((F.col("__siy") + F.col("__dy")) >= 0)
-            & ((F.col("__siy") + F.col("__dy")) < n)
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(dx_lo), F.lit(dx_hi))).alias("__dx")
-        )
-        .select(
-            F.col("__sid"), F.col("__sx"), F.col("__sy"),
-            (
-                F.pmod(F.col("__six") + F.col("__dx"), F.lit(n)) * n
-                + (F.col("__siy") + F.col("__dy"))
-            ).alias("__cell"),
-        )
-    )
-    p_ix, p_iy = cell_ij(F.col(x), F.col(y))
-    p = points.select(
-        F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
-        (p_ix * n + p_iy).alias("__cell"),
-    ).where(F.col("__cell").isNotNull())
-    # the one shuffle: hash the point stream by its cell.  The join
-    # (broadcast or shuffled — Catalyst's pick; the site side is the
-    # small one either way) preserves this distribution, so both
-    # windows below run in place.
-    p = p.repartition(F.col("__cell"))
-    j = p.join(s, "__cell")
-    # explicit multiplication (not pow): bit-identical to the SQL
-    # oracle's (dx*dx + dy*dy) on every engine
-    dx = F.col("__px") - F.col("__sx")
-    dy = F.col("__py") - F.col("__sy")
-    d2 = dx * dx + dy * dy
-    # per-point top-k via a window over (d2, site_id): sort-based, so
-    # it SPILLS gracefully — the previous collect_list/array_sort
-    # ObjectHashAggregate held every point's candidate array on heap
-    # and OOM'd 32-thread local JVMs at moderate scale
-    w = Window.partitionBy("__cell", point_id).orderBy(
-        F.col("__d2").asc(), F.col("__sid").asc()
-    )
-    cand = j.select("__cell", point_id, F.col("__sid"), d2.alias("__d2"))
-    certain_c = (
-        F.lit(True) if covering
-        else (F.sqrt(F.col("__d2")) < F.lit(bound))
-    )
-    top = (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            "__cell",
-            F.col(point_id),
-            F.col("__sid").alias("site_id"),
-            F.col("rank"),
-            F.sqrt(F.col("__d2")).alias("dist"),
-            certain_c.alias("certain"),
-        )
-    )
-    if _flags:
-        wp = Window.partitionBy("__cell", point_id)
-        top = (
-            top.withColumn("__nk", F.count(F.lit(1)).over(wp))
-            .withColumn("__allc", F.min(F.col("certain").cast("int")).over(wp))
-        )
-    return top.drop("__cell")
+def _cell_ij(n: int, lon_c, lat_c):
+    """(ix, iy) of the n×n lon/lat grid cell holding each point, clamped
+    to the grid; callers key cells as ``ix·n + iy``."""
+    ix = F.least(
+        F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
+        F.lit(n - 1),
+    ).cast("long")
+    iy = F.least(
+        F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
+        F.lit(n - 1),
+    ).cast("long")
+    return ix, iy
 
 
 def within_distance(
@@ -333,23 +205,12 @@ def within_distance(
     rx = int(math.ceil(d / cell_w))
     ry = int(math.ceil(d / cell_h))
 
-    def cell_ij(lon_c, lat_c):
-        ix = F.least(
-            F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        iy = F.least(
-            F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        return ix, iy
-
-    s_ix, s_iy = cell_ij(F.col(sx), F.col(sy))
+    s_ix, s_iy = _cell_ij(n, F.col(sx), F.col(sy))
     s = sites.select(
         F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
         F.col(sy).alias("__sy"), (s_ix * n + s_iy).alias("__cell"),
     )
-    p_ix, p_iy = cell_ij(F.col(x), F.col(y))
+    p_ix, p_iy = _cell_ij(n, F.col(x), F.col(y))
     offs = [(dy, dx) for dy in range(-ry, ry + 1) for dx in range(-rx, rx + 1)]
     cells_arr = F.array(*[
         F.when(
@@ -385,26 +246,27 @@ def knn_join_grid_exact(
     sx: str = "x",
     sy: str = "y",
 ) -> DataFrame:
-    """Single-pass TOTAL grid kNN — exact answer, one shuffle of the
-    point stream, no escalation loop, no Python.
+    """Single-pass grid kNN — exact answer, no Python, no collect of
+    the site side.
 
-    The ring-escalation wrapper exists because a fixed neighborhood
-    cannot promise the k-th neighbor is inside it.  But the promise is
-    computable wholly on the SITE side: for every grid cell, rank all
-    sites by their max distance to the cell rectangle (``ud2``) and
-    keep exactly the sites whose min distance (``ld2``) does not exceed
+    A fixed search neighborhood cannot promise that a point's k-th
+    neighbor is inside it.  But the promise is computable wholly on the
+    SITE side: for every grid cell, rank all sites by their max distance
+    to the cell rectangle (``ud2``) and keep exactly the sites whose min distance (``ld2``) does not exceed
     the k-th smallest ``ud2`` — any dropped site is strictly dominated
     by k others for EVERY point in the cell, so the per-cell candidate
     list provably contains each point's true top-k.  Points then join
     their single cell's pruned list and a ``(__cell, point_id)`` window
-    takes the top-k — the hash distribution from the one point shuffle
-    satisfies both the join and the window, so no second Exchange.
+    takes the top-k.  When Catalyst broadcasts the pruned site list, the
+    point shuffle by cell satisfies both the join and the window; when
+    it broadcasts the point side instead (a small point side, as in the
+    contract query), the window shuffles again.
 
     Site-side cost is O(4^res · |sites|) rows through two tiny window
     passes — the right plan whenever the site table is the small one
-    (the broadcast regime, but with zero Python and no collect).  For
-    a site side too large for that product, use
-    :func:`knn_join_grid_total` (ring escalation) instead.
+    (the broadcast regime, but with zero Python and no collect).
+    Output: (point_id, site_id, rank, dist), the same rows and
+    tie-break as :func:`knn_join_broadcast`.
     """
     from pyspark.sql import Window
 
@@ -418,7 +280,7 @@ def knn_join_grid_exact(
         F.col(sy).alias("__sy"),
     )
     pairs = cells_df.crossJoin(s0)
-    # cell rect from the id (__cell = ix·n + iy, cell_ij encoding)
+    # cell rect from the id (__cell = ix·n + iy, _cell_ij encoding)
     x0 = (F.floor(F.col("__cell") / n) * cell_w - 180.0)
     y0 = (F.pmod(F.col("__cell"), F.lit(n)) * cell_h - 90.0)
     ldx = F.greatest(x0 - F.col("__sx"), F.col("__sx") - (x0 + cell_w), F.lit(0.0))
@@ -444,18 +306,7 @@ def knn_join_grid_exact(
         .select("__cell", "__sid", "__sx", "__sy")
     )
 
-    def cell_ij(lon_c, lat_c):
-        ix = F.least(
-            F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        iy = F.least(
-            F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        return ix, iy
-
-    p_ix, p_iy = cell_ij(F.col(x), F.col(y))
+    p_ix, p_iy = _cell_ij(n, F.col(x), F.col(y))
     p = points.select(
         F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
         (p_ix * n + p_iy).alias("__cell"),
@@ -479,271 +330,3 @@ def knn_join_grid_exact(
             F.sqrt(F.col("__d2")).alias("dist"),
         )
     )
-
-
-# checkpointed per-pass outputs from prior knn_join_grid_total calls —
-# released on the next call (they must outlive their own call: the
-# returned union is lazy) or explicitly via release_persisted()
-_PERSISTED: list = []
-
-
-def release_persisted() -> None:
-    """Free checkpoint blocks from earlier knn_join_grid_total calls."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-def knn_join_grid_total(
-    points: DataFrame,
-    sites: DataFrame,
-    k: int = 1,
-    res: int = 4,
-    start_ring: int = 1,
-    x: str = "lon",
-    y: str = "lat",
-    point_id: str = "point_id",
-    site_id: str = "site_id",
-    sx: str = "x",
-    sy: str = "y",
-) -> DataFrame:
-    """Total-answer wrapper over :func:`knn_join_grid`: escalates the
-    search ``ring`` (doubling) for the points whose top-k is not yet
-    provably final; the last pass resolves the residue with a direct
-    site cross-join top-k (exactly what a grid pass at covering ring
-    degenerates to, minus the explode machinery).  The uncertain
-    remainder shrinks geometrically, so the extra passes touch a
-    vanishing fraction of the data — the fully-distributed kNN plan
-    with a completeness guarantee (VERDICT r1 item 4).
-
-    The whole schedule is LAZY — ring escalation is a static doubling
-    sequence, so no driver-side count/checkpoint actions are needed
-    between passes (the r3 form paid a ``localCheckpoint`` disk write
-    plus a ``limit(1).count()`` job per pass — the 20× regression on
-    knn_sites_grid).  Each pass output is ``persist()``-ed so the
-    done-rows/done-ids double use reads cache, and everything
-    materializes inside the caller's single action.
-
-    Output: (point_id, site_id, rank, dist) — same shape/tie-break as
-    ``knn_join_broadcast``, no ``certain`` column (always total).
-    """
-    from pyspark.sql import Window
-
-    release_persisted()
-    n = 1 << res
-    out_cols = [point_id, "site_id", "rank", "dist"]
-    results = []
-    remaining = points.select(point_id, x, y)
-    ring = start_ring
-    while 2 * ring + 1 < n:
-        out = knn_join_grid(
-            remaining, sites, k=k, res=res, ring=ring, x=x, y=y,
-            point_id=point_id, site_id=site_id, sx=sx, sy=sy,
-            _flags=True,
-        ).persist()
-        _PERSISTED.append(out)
-        done_f = (F.col("__nk") == k) & (F.col("__allc") == 1)
-        results.append(out.where(done_f).select(*out_cols))
-        done_ids = out.where(done_f).select(point_id).distinct()
-        # points with no candidate rows at this ring stay in remaining
-        # via the anti-join on the ORIGINAL remaining (they never
-        # appear in out at all)
-        remaining = remaining.join(done_ids, point_id, "anti")
-        ring *= 2
-    # final pass: the residue meets every site.  A covering grid pass
-    # IS this cross join (every (point, site) cell pair matches) —
-    # doing it directly also fixes the r3 covering-ring lat gap
-    # (2·ring+1 ≥ n does not reach iy = n-1 from iy = 0).
-    s2 = sites.select(
-        F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
-        F.col(sy).alias("__sy"),
-    )
-    jx = remaining.crossJoin(s2)
-    ddx = F.col(x) - F.col("__sx")
-    ddy = F.col(y) - F.col("__sy")
-    d2 = (ddx * ddx + ddy * ddy).alias("__d2")
-    w = Window.partitionBy(point_id).orderBy(
-        F.col("__d2").asc(), F.col("__sid").asc()
-    )
-    results.append(
-        jx.select(point_id, F.col("__sid"), d2)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            point_id,
-            F.col("__sid").alias("site_id"),
-            "rank",
-            F.sqrt(F.col("__d2")).alias("dist"),
-        )
-    )
-    acc = results[0]
-    for r in results[1:]:
-        acc = acc.unionByName(r)
-    return acc
-
-
-# ---------------------------------------------------------------------------
-# Distributed path: cell-bucketed ring expansion (both sides large)
-# ---------------------------------------------------------------------------
-
-
-class SiteGrid:
-    """Cell-bucketed site index for ring-expansion kNN (picklable).
-
-    Sites are bucketed at a single resolution; queries expand Chebyshev
-    rings of cells until the best-k distances are provably final: once
-    ``(r-1) · min(cell_w, cell_h) > kth_best`` no farther ring can
-    improve the answer (cells are axis-aligned squares).
-
-    ``query_batch`` is fully vectorized over the point axis: per ring
-    level, each (dy, dx) offset maps every live point to at most one
-    cell, whose site span comes from two ``searchsorted`` calls; the
-    variable-length (point, site) pair lists are built with
-    repeat/arange and folded into a running per-point top-k.
-    """
-
-    def __init__(self, rows, res: int = 6):
-        self.res = res
-        sid = np.array([r[0] for r in rows], dtype=np.int64)
-        sx = np.array([r[1] for r in rows], dtype=np.float64)
-        sy = np.array([r[2] for r in rows], dtype=np.float64)
-        cell = cells.latlon_to_cell(sy, sx, res)
-        order = np.argsort(cell, kind="stable")
-        self.sid, self.sx, self.sy = sid[order], sx[order], sy[order]
-        self.cell_sorted = cell[order]
-        n = 1 << res
-        self.n = n
-        self.cell_w = 360.0 / n
-        self.cell_h = 180.0 / n
-        self.max_ring = n
-
-    def query_batch(self, px: np.ndarray, py: np.ndarray, k: int):
-        """k nearest sites per point → (point_idx, site_id, rank, dist)
-        arrays, rank 1-based, ties broken by (dist, site_id)."""
-        npts = len(px)
-        kk = min(k, len(self.sid))
-        if npts == 0 or kk == 0:
-            e = np.empty(0, np.int64)
-            return e, e, e, np.empty(0, np.float64)
-        ix, iy = cells.latlon_to_ij(py, px, self.res)
-        # running top-k per point: (dist², site_id), +inf padded
-        best_d = np.full((npts, kk), np.inf)
-        best_s = np.full((npts, kk), -1, dtype=np.int64)
-        live = np.arange(npts)
-        lb_unit = min(self.cell_w, self.cell_h)
-        r = 0
-        while r <= self.max_ring and len(live):
-            offsets = (
-                [(0, 0)] if r == 0 else
-                [(dy, dx) for dy in range(-r, r + 1)
-                 for dx in range(-r, r + 1)
-                 if max(abs(dy), abs(dx)) == r]
-            )
-            pr_idx: list[np.ndarray] = []
-            pr_site: list[np.ndarray] = []
-            for dy, dx in offsets:
-                ny = iy[live] + dy
-                ok = (ny >= 0) & (ny < self.n)
-                if not ok.any():
-                    continue
-                sub = live[ok]
-                nx = np.mod(ix[sub] + dx, self.n)
-                cc = cells.ij_to_cell(nx, ny[ok], self.res)
-                lo = np.searchsorted(self.cell_sorted, cc, side="left")
-                hi = np.searchsorted(self.cell_sorted, cc, side="right")
-                cnt = hi - lo
-                nz = cnt > 0
-                if not nz.any():
-                    continue
-                lo, cnt, subnz = lo[nz], cnt[nz], sub[nz]
-                # variable-length span gather: repeat + cumsum arange
-                reps = np.repeat(subnz, cnt)
-                starts = np.repeat(lo, cnt)
-                within = np.arange(len(reps)) - np.repeat(
-                    np.cumsum(cnt) - cnt, cnt
-                )
-                pr_idx.append(reps)
-                pr_site.append(starts + within)
-            if pr_idx:
-                pi = np.concatenate(pr_idx)
-                si = np.concatenate(pr_site)
-                d2 = (px[pi] - self.sx[si]) ** 2 + (py[pi] - self.sy[si]) ** 2
-                # fold pairs into the running top-k: concat + partial sort
-                allp = np.concatenate([pi, np.repeat(np.arange(npts), kk)])
-                alld = np.concatenate([d2, best_d.ravel()])
-                alls = np.concatenate([self.sid[si], best_s.ravel()])
-                order = np.lexsort((alls, alld, allp))
-                allp, alld, alls = allp[order], alld[order], alls[order]
-                # first kk entries per point (groups are contiguous)
-                grp_start = np.searchsorted(allp, np.arange(npts), "left")
-                take = (grp_start[:, None] + np.arange(kk)[None, :])
-                grp_end = np.append(grp_start[1:], len(allp))
-                valid = take < grp_end[:, None]
-                take = np.minimum(take, len(allp) - 1)
-                # ring cells are disjoint across rounds and live-point
-                # filtering only shrinks the set, so a site enters the
-                # buffer at most once — no dedup needed
-                best_d = np.where(valid, alld[take], np.inf)
-                best_s = np.where(valid, alls[take], -1)
-            kth = best_d[:, kk - 1]
-            done = (kth < np.inf) & (
-                ((r) * lb_unit) ** 2 > kth
-            )
-            live = np.arange(npts)[~done]
-            r += 1
-        ranks = np.tile(np.arange(1, kk + 1, dtype=np.int64), npts)
-        keep = best_s.ravel() >= 0
-        pidx = np.repeat(np.arange(npts), kk)
-        return (
-            pidx[keep],
-            best_s.ravel()[keep],
-            ranks[keep],
-            np.sqrt(best_d.ravel()[keep]),
-        )
-
-
-def knn_join_cells(
-    points: DataFrame,
-    sites: DataFrame,
-    k: int = 1,
-    res: int = 6,
-    x: str = "lon",
-    y: str = "lat",
-    point_cols: list[str] | None = None,
-    site_id: str = "site_id",
-    sx: str = "x",
-    sy: str = "y",
-) -> DataFrame:
-    """Ring-expansion kNN with a per-executor cell-bucketed site grid.
-
-    Still ships the site table via broadcast (the grid build is once
-    per executor); for a truly unbroadcastable site side the same
-    SiteGrid logic runs per cell-group after a cell equi-join — wire
-    that variant when a use case needs it.
-    """
-    if point_cols is None:
-        point_cols = [c for c in points.columns if c not in (x, y)]
-    rows = [(r[0], r[1], r[2]) for r in sites.select(site_id, sx, sy).collect()]
-    bc = points.sparkSession.sparkContext.broadcast((rows, res))
-    schema = _out_schema(points, point_cols)
-    src = points.select(*point_cols, x, y).where(
-        F.col(x).isNotNull() & F.col(y).isNotNull()
-    )
-
-    def probe(batches):
-        grid = SiteGrid(bc.value[0], res=bc.value[1])
-        for pdf in batches:
-            px = pdf[x].to_numpy(np.float64)
-            py = pdf[y].to_numpy(np.float64)
-            pidx, sids, ranks, dists = grid.query_batch(px, py, k)
-            if len(pidx) == 0:
-                continue
-            out = pdf.iloc[pidx][point_cols].reset_index(drop=True)
-            out["site_id"] = sids
-            out["rank"] = ranks
-            out["dist"] = dists
-            yield out
-
-    return src.mapInPandas(probe, schema=schema)

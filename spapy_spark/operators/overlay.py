@@ -949,19 +949,6 @@ def overlay_join(
     return out
 
 
-def overlay_intersection(
-    left: DataFrame,
-    right: DataFrame,
-    res: int = 8,
-    left_id: str = "left_id",
-    right_id: str = "right_id",
-    geometry: str = "geometry",
-) -> DataFrame:
-    """Pairwise A∩B for all candidate pairs (right rings convex)."""
-    return overlay_join(left, right, "intersection", res, left_id,
-                        right_id, geometry)
-
-
 def self_overlay_fold(
     df: DataFrame, op: str = "intersection", geometry: str = "geometry"
 ) -> dict | None:

@@ -278,7 +278,10 @@ SITES_SCHEMA = "site_id bigint, kind string, x double, y double, geometry binary
 _KINDS = ["poi", "station", "tower"]
 
 
-def _site_rows(n: int = 2000) -> list[tuple]:
+@functools.lru_cache(maxsize=8)
+def _site_rows(n: int = 2000) -> tuple[tuple, ...]:
+    """Driver-side site synthesis: half clustered, half uniform points.
+    Memoized: the rows depend only on ``n``."""
     ids = np.arange(n, dtype=np.int64)
     in_cluster = ids % 2 == 0
     ck = ids % len(CLUSTERS)
@@ -288,7 +291,7 @@ def _site_rows(n: int = 2000) -> list[tuple]:
     lon_u = -180.0 + u01(ids, 204) * 360.0
     lat = np.round(np.clip(np.where(in_cluster, lat_c, lat_u), -89.99, 89.99), 6)
     lon = np.round(((np.where(in_cluster, lon_c, lon_u) + 180) % 360) - 180, 6)
-    return [
+    return tuple(
         (
             int(i),
             _KINDS[int(i) % 3],
@@ -297,11 +300,12 @@ def _site_rows(n: int = 2000) -> list[tuple]:
             wkb.dumps(wkb.point(float(lon[i]), float(lat[i]))),
         )
         for i in ids
-    ]
+    )
 
 
 def sites(spark, n: int = 2000):
-    return spark.createDataFrame(_site_rows(n), schema=SITES_SCHEMA)
+    # a local relation, like zones(): collect() needs no Spark job
+    return spark.createDataFrame(sites_pdf(n), schema=SITES_SCHEMA)
 
 
 def sites_pdf(n: int = 2000) -> pd.DataFrame:

@@ -79,34 +79,6 @@ def test_ann_brute_vs_numpy(spark):
         assert mine[0] == qid  # self is rank 1
 
 
-def test_ann_lsh_recall(spark):
-    # clustered vectors: 20 centers × 10 members with small noise — the
-    # realistic near-dup regime LSH is built for
-    rng = np.random.default_rng(12)
-    centers = rng.normal(size=(20, 16))
-    vecs = np.concatenate(
-        [c + 0.05 * rng.normal(size=(10, 16)) for c in centers]
-    ).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(200)],
-        "vec_id long, embedding array<float>",
-    )
-    q = df.where(F.col("vec_id").isin([0, 10, 20, 30, 40])).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = ann.cosine_topk(df, q, k=3).collect()
-    approx = ann.lsh_cosine_topk(
-        df, q, dim=16, k=3, n_planes=8, probes=1
-    ).collect()
-    e = {(r["query_id"], r["vec_id"]) for r in exact}
-    a = {(r["query_id"], r["vec_id"]) for r in approx}
-    # self-match always survives LSH (identical bucket)
-    for qid in (0, 10, 20, 30, 40):
-        assert (qid, qid) in a
-    # same-cluster neighbors dominate both top-3 sets → high recall
-    assert len(e & a) >= 12
-
-
 def test_text_ops(spark, docs):
     s = {r["doc_id"]: r for r in text.token_stats(docs).collect()}
     assert s[0]["n_tokens"] == 12
@@ -181,28 +153,6 @@ def test_lang_ngram(spark):
     out = {r["doc_id"]: r["lang_pred"]
            for r in text.lang_ngram(docs).collect()}
     assert out[0] == "en" and out[1] == "de" and out[2] == "fr"
-
-
-def test_ivf_cosine_topk_recall(spark):
-    from spapy_spark.operators import ann
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = ann.cosine_topk_arrow(emb, queries, k=5).collect()
-    approx = ann.ivf_cosine_topk(
-        emb, queries, k=5, n_centroids=8, nprobe=4
-    ).collect()
-    want = {(r["query_id"], r["vec_id"]) for r in exact}
-    got = {(r["query_id"], r["vec_id"]) for r in approx}
-    recall = len(want & got) / len(want)
-    assert recall >= 0.7, recall
-    # probing ALL centroids must recover the exact answer
-    full = ann.ivf_cosine_topk(
-        emb, queries, k=5, n_centroids=8, nprobe=8
-    ).collect()
-    got_full = {(r["query_id"], r["vec_id"]) for r in full}
-    assert got_full == want
 
 
 def test_cosine_topk_arrow_matches_exact(spark):

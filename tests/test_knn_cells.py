@@ -1,47 +1,11 @@
-"""Ring-expansion kNN must agree exactly with the brute-force
-broadcast path (same tie-break) on clustered + uniform points."""
+"""The grid kNN and the distance-within join must agree exactly with
+brute force (same tie-break) on clustered + uniform points."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from spapy_spark.operators import knn
-from spapy_spark.operators.knn import SiteGrid
 from spapy_spark.sources import synth
-
-
-def test_sitegrid_batch_matches_bruteforce():
-    rows = [(r[0], r[2], r[3]) for r in synth._site_rows(500)]
-    grid = SiteGrid(rows, res=5)
-    ids = np.arange(3000)
-    _, lat, lon = synth.doc_coords(ids)
-    px, py = lon[:400], lat[:400]
-    pi, si, rk, d = grid.query_batch(px, py, k=3)
-    sid = np.array([r[0] for r in rows])
-    sx = np.array([r[1] for r in rows])
-    sy = np.array([r[2] for r in rows])
-    for p in range(400):
-        d2 = (px[p] - sx) ** 2 + (py[p] - sy) ** 2
-        order = np.lexsort((sid, d2))[:3]
-        mine = si[pi == p]
-        assert mine.tolist() == sid[order].tolist(), f"point {p}"
-        md = d[pi == p]
-        np.testing.assert_allclose(md, np.sqrt(d2[order]), rtol=1e-12)
-
-
-def test_knn_cells_matches_broadcast(spark):
-    sites = synth.sites(spark, 300)
-    ids = np.arange(1000)
-    _, lat, lon = synth.doc_coords(ids)
-    pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in ids[:500]],
-        "point_id long, lat double, lon double",
-    )
-    a = knn.knn_join_broadcast(pts, sites, k=2, point_cols=["point_id"])
-    b = knn.knn_join_cells(pts, sites, k=2, res=5, point_cols=["point_id"])
-    ra = sorted((r["point_id"], r["rank"], r["site_id"]) for r in a.collect())
-    rb = sorted((r["point_id"], r["rank"], r["site_id"]) for r in b.collect())
-    assert ra == rb and len(ra) == 1000  # 500 points × k=2
 
 
 def test_knn_haversine_metric(spark):
@@ -68,31 +32,6 @@ def test_knn_haversine_metric(spark):
     assert hav[0]["dist"] == pytest.approx(d, rel=1e-12)
 
 
-def test_knn_grid_no_broadcast(spark):
-    """Pure-Catalyst distributed kNN: certain rows must agree exactly
-    with the brute-force path; the plan must contain no Python node."""
-    sites = synth.sites(spark, 400)
-    ids = np.arange(2000)
-    _, lat, lon = synth.doc_coords(ids)
-    pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in ids[:600]],
-        "point_id long, lat double, lon double",
-    )
-    grid = knn.knn_join_grid(pts, sites, k=2, res=4, ring=1)
-    plan = grid._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan  # fully JVM-side
-    rows = grid.collect()
-    brute = knn.knn_join_broadcast(pts, sites, k=2,
-                                   point_cols=["point_id"]).collect()
-    want = {(r["point_id"], r["rank"]): r["site_id"] for r in brute}
-    n_certain = 0
-    for r in rows:
-        if r["certain"]:
-            n_certain += 1
-            assert want[(r["point_id"], r["rank"])] == r["site_id"]
-    assert n_certain > len(rows) * 0.5  # most points resolve in ring 1
-
-
 def test_topk_block_chunked_matches_dense():
     """Site-axis chunking (the 10^5-site memory fix) is bit-identical
     to the one-shot dense path, both metrics."""
@@ -112,28 +51,6 @@ def test_topk_block_chunked_matches_dense():
         knn_mod._TOPK_BLOCK_BYTES = save
     for a, b in zip(ch, dn):
         np.testing.assert_array_equal(a, b)
-
-
-def test_knn_grid_total_matches_broadcast(spark):
-    """Ring-escalation wrapper returns the TOTAL answer — every point,
-    k rows, identical to brute force (no certain caveat left)."""
-    sites = synth.sites(spark, 64)
-    ids = np.arange(500)
-    _, lat, lon = synth.doc_coords(ids)
-    pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in ids],
-        "point_id long, lat double, lon double",
-    )
-    total = knn.knn_join_grid_total(pts, sites, k=3, res=4).collect()
-    brute = knn.knn_join_broadcast(pts, sites, k=3,
-                                   point_cols=["point_id"]).collect()
-    assert len(total) == len(brute) == 500 * 3
-    want = {(r["point_id"], r["rank"]): (r["site_id"], r["dist"])
-            for r in brute}
-    for r in total:
-        ws, wd = want[(r["point_id"], r["rank"])]
-        assert r["site_id"] == ws
-        assert r["dist"] == wd
 
 
 def test_within_distance_matches_bruteforce(spark):
@@ -164,7 +81,8 @@ def test_within_distance_matches_bruteforce(spark):
 def test_knn_grid_exact_matches_broadcast(spark):
     """Single-pass exact grid kNN (per-cell domination pruning) is
     bit-identical to brute force for every point — including clustered
-    sites, k > cell occupancy, and points in empty cells."""
+    sites, k > cell occupancy, and points in empty cells — and runs
+    wholly JVM-side: no Python node in its plan."""
     sites = synth.sites(spark, 64)
     ids = np.arange(800)
     _, lat, lon = synth.doc_coords(ids)
@@ -173,7 +91,10 @@ def test_knn_grid_exact_matches_broadcast(spark):
         "point_id long, lat double, lon double",
     )
     for res in (2, 4, 6):
-        ex = knn.knn_join_grid_exact(pts, sites, k=3, res=res).collect()
+        grid = knn.knn_join_grid_exact(pts, sites, k=3, res=res)
+        plan = grid._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan
+        ex = grid.collect()
         brute = knn.knn_join_broadcast(pts, sites, k=3,
                                        point_cols=["point_id"]).collect()
         assert len(ex) == len(brute) == 800 * 3
@@ -193,3 +114,15 @@ def test_knn_grid_exact_k_exceeds_sites(spark):
     )
     rows = knn.knn_join_grid_exact(pts, sites, k=9, res=3).collect()
     assert len(rows) == 2 * 5
+
+
+def test_sites_is_a_local_relation_of_the_synthesized_rows(spark):
+    sdf = synth.sites(spark, 300)
+    assert sdf.schema.simpleString() == (
+        "struct<site_id:bigint,kind:string,x:double,y:double,"
+        "geometry:binary>"
+    )
+    # collect() (every knn_join_broadcast) reads a local relation on the
+    # driver, no Spark job
+    assert "LocalRelation" in sdf._jdf.queryExecution().optimizedPlan().toString()
+    assert [tuple(r) for r in sdf.collect()] == list(synth._site_rows(300))

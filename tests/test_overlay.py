@@ -111,7 +111,10 @@ class TestDistributedOverlay:
     def test_overlay_intersection_matches_bruteforce(
         self, spark, zones_df, boxes_df
     ):
-        res = overlay.overlay_intersection(zones_df, boxes_df).collect()
+        res = overlay.overlay_join(
+            zones_df, boxes_df, "intersection", 8, "left_id", "right_id",
+            "geometry",
+        ).collect()
         got = {(r["left_id"], r["right_id"]) for r in res}
         # brute: nonempty convex-clip intersection per pair
         zs = [(r["left_id"], wkb.loads(bytes(r["geometry"])))

@@ -1,8 +1,12 @@
 """Shapefile reader vs the reference's own test data (NaturalEarth +
 Box.shp — the exact files SpaPy's tests load, /root/reference/
-SpaPyTests/Tests/SpaVectorTest.py:34,215)."""
+SpaPyTests/Tests/SpaVectorTest.py:34,215), vs byte-packed fixtures,
+and writer roundtrips."""
+
+import struct
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from spapy_spark.geometry import kernels, wkb
@@ -156,3 +160,162 @@ def test_dbf_vectorized_writer_nulls_and_types(tmp_path):
     rec0 = raw[hsize:hsize + rsize]
     assert rec0[0:1] == b" "
     assert rec0[1:19] == b"                 1"  # %18d
+
+
+# ---------------------------------------------------------------------------
+# Hermetic fixtures: .shp/.shx/.dbf bytes packed field by field from the
+# ESRI shapefile and dBASE III layouts, independent of the reference data
+# above and of our own writer.
+# ---------------------------------------------------------------------------
+
+
+def _shp_content(stype, geom):
+    """One record's little-endian content: a point is an (x, y) pair,
+    a polyline/polygon is a list of parts (lists of (x, y))."""
+    if geom is None:
+        return struct.pack("<i", 0)
+    if stype == 1:
+        return struct.pack("<idd", 1, *geom)
+    pts = [p for part in geom for p in part]
+    starts = np.cumsum([0] + [len(part) for part in geom[:-1]])
+    xs, ys = [p[0] for p in pts], [p[1] for p in pts]
+    return (
+        struct.pack("<i4d2i", stype, min(xs), min(ys), max(xs), max(ys),
+                    len(geom), len(pts))
+        + struct.pack(f"<{len(geom)}i", *starts)
+        + struct.pack(f"<{2 * len(pts)}d", *[c for p in pts for c in p])
+    )
+
+
+def _shp_header(stype, file_bytes):
+    # big-endian file code + length in 16-bit words, little-endian rest
+    return (
+        struct.pack(">7i", 9994, 0, 0, 0, 0, 0, file_bytes // 2)
+        + struct.pack("<2i4d4d", 1000, stype, -180, -90, 180, 90, 0, 0, 0, 0)
+    )
+
+
+def _write_shp(base, stype, geoms):
+    recs, index, off = [], [], 100
+    for i, g in enumerate(geoms, 1):
+        c = _shp_content(stype, g)
+        recs.append(struct.pack(">2i", i, len(c) // 2) + c)
+        index.append(struct.pack(">2i", off // 2, len(c) // 2))
+        off += 8 + len(c)
+    with open(base + ".shp", "wb") as f:
+        f.write(_shp_header(stype, off) + b"".join(recs))
+    with open(base + ".shx", "wb") as f:
+        f.write(_shp_header(stype, 100 + 8 * len(geoms)) + b"".join(index))
+
+
+def _write_dbf(base, fields, records):
+    """fields: (name, type, length, decimals); records: raw field bytes
+    per row, each already padded to its field length."""
+    hsize = 32 + 32 * len(fields) + 1
+    rsize = 1 + sum(f[2] for f in fields)
+    out = struct.pack("<4BIHH20x", 3, 124, 1, 31, len(records), hsize, rsize)
+    for name, ftype, flen, fdec in fields:
+        out += struct.pack("<11sc4xBB14x", name.encode(), ftype.encode(),
+                           flen, fdec)
+    out += b"\r"
+    for rec in records:
+        assert [len(v) for v in rec] == [f[2] for f in fields]
+        out += b" " + b"".join(rec)
+    with open(base + ".dbf", "wb") as f:
+        f.write(out + b"\x1a")
+
+
+def _sq(x0, y0, x1, y1, cw=True):
+    ring = [(x0, y0), (x0, y1), (x1, y1), (x1, y0), (x0, y0)]
+    return ring if cw else ring[::-1]
+
+
+def test_packed_polygons_multipart_with_hole(tmp_path):
+    base = str(tmp_path / "poly")
+    outer_a = _sq(0, 0, 10, 10)  # CW: exterior
+    outer_b = _sq(20, 0, 25, 5)  # CW: exterior
+    hole = _sq(2, 2, 4, 4, cw=False)  # CCW: hole inside outer_a
+    # the hole comes after both exteriors: it must be placed by
+    # containment, not appended to the last exterior
+    _write_shp(base, 5, [[outer_a, outer_b, hole], None, [outer_a, hole]])
+    pdf = shapefile.read_pdf(base + ".shp")
+    assert list(pdf.columns) == ["geometry"] and len(pdf) == 3
+    g0 = wkb.loads(pdf["geometry"][0])
+    assert g0["type"] == "MultiPolygon"
+    (a_ext, a_hole), (b_ext,) = g0["coordinates"]
+    np.testing.assert_array_equal(a_ext, outer_a)
+    np.testing.assert_array_equal(a_hole, hole)
+    np.testing.assert_array_equal(b_ext, outer_b)
+    assert kernels.geom_area(g0) == 100 - 4 + 25
+    assert pdf["geometry"][1] is None
+    g2 = wkb.loads(pdf["geometry"][2])
+    assert g2["type"] == "Polygon" and len(g2["coordinates"]) == 2
+    assert kernels.geom_area(g2) == 96
+
+
+def test_packed_polylines(tmp_path):
+    base = str(tmp_path / "lines")
+    one = [(0.5, 1.0), (2.0, 3.5), (4.0, -1.25)]
+    two = [[(-10.0, 0.0), (-9.0, 1.0)], [(5.0, 5.0), (6.0, 5.0), (6.0, 7.0)]]
+    _write_shp(base, 3, [[one], two])
+    pdf = shapefile.read_pdf(base + ".shp")
+    g0, g1 = (wkb.loads(b) for b in pdf["geometry"])
+    assert g0["type"] == "LineString"
+    np.testing.assert_array_equal(g0["coordinates"], one)
+    assert g1["type"] == "MultiLineString"
+    assert len(g1["coordinates"]) == 2
+    for got, want in zip(g1["coordinates"], two):
+        np.testing.assert_array_equal(got, want)
+
+
+def test_packed_points_and_typed_dbf(tmp_path, spark):
+    base = str(tmp_path / "pts")
+    _write_shp(base, 1, [(1.5, -2.25), None, (-100.0, 45.0)])
+    fields = [
+        ("NAME", "C", 8, 0),
+        ("POP", "N", 6, 0),
+        ("RATIO", "N", 8, 2),
+        ("SCORE", "F", 10, 3),
+        ("OK", "L", 1, 0),
+        ("SEEN", "D", 8, 0),
+    ]
+    _write_dbf(base, fields, [
+        [b"Caf\xe9    ", b"  1234", b"   -0.50", b"     1.125", b"T",
+         b"20240131"],
+        [b"        ", b"      ", b"********", b"          ", b"f",
+         b"        "],
+        [b"x y     ", b"-00042", b"   12.00", b"   -3.5e+2", b"y",
+         b"19991231"],
+    ])
+    pdf = shapefile.read_pdf(base + ".shp")
+    assert list(pdf.columns) == [f[0] for f in fields] + ["geometry"]
+    # C: cp1252, trailing pad stripped
+    assert list(pdf["NAME"]) == ["Café", "", "x y"]
+    # N without decimals → int; blank → null
+    assert pdf["POP"][0] == 1234 and pdf["POP"][2] == -42
+    assert pd.isna(pdf["POP"][1])
+    # N with decimals and F → float; all-'*' overflow → null
+    assert pdf["RATIO"][0] == -0.5 and pdf["RATIO"][2] == 12.0
+    assert pd.isna(pdf["RATIO"][1])
+    assert pdf["SCORE"][0] == 1.125 and pdf["SCORE"][2] == -350.0
+    assert pd.isna(pdf["SCORE"][1])
+    # L: T/t/Y/y → True, anything else → False
+    assert list(pdf["OK"]) == [True, False, True]
+    # D: kept as its YYYYMMDD text
+    assert list(pdf["SEEN"]) == ["20240131", "", "19991231"]
+    g = wkb.loads(pdf["geometry"][0])
+    assert g["type"] == "Point" and tuple(g["coordinates"]) == (1.5, -2.25)
+    assert pdf["geometry"][1] is None
+    assert tuple(wkb.loads(pdf["geometry"][2])["coordinates"]) == (-100.0, 45.0)
+
+    df = shapefile.read_spark(spark, base + ".shp")
+    types = dict(df.dtypes)
+    assert types["NAME"] == "string" and types["SEEN"] == "string"
+    assert types["OK"] == "boolean" and types["geometry"] == "binary"
+    assert types["RATIO"] == types["SCORE"] == "double"
+    rows = df.collect()
+    assert [r["NAME"] for r in rows] == ["Café", "", "x y"]
+    assert [r["POP"] for r in rows] == [1234, None, -42]
+    assert [r["RATIO"] for r in rows] == [-0.5, None, 12.0]
+    assert rows[1]["geometry"] is None
+    assert bytes(rows[2]["geometry"]) == pdf["geometry"][2]

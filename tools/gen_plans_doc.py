@@ -89,19 +89,24 @@ def main():
         "hash join on the integer cell + exact distance filter — no "
         "Python node, no broadcast; the shuffle key is the cell.",
     )
-    kg = knn.knn_join_grid(
-        pts.limit(10000), synth.sites(spark, 64), k=3, res=3, ring=2
+    kg = knn.knn_join_grid_exact(
+        pts.limit(10000), synth.sites(spark, 64), k=3, res=5
     )
     cap(
-        "Distributed grid kNN (no broadcast, no Python)", kg,
-        "Both sides quantize once; the Δ-sequence explode keeps the "
-        "expression tree O(1) in the ring; per-point top-k is a "
-        "sort-based window `row_number over (d2, site_id)` (spills "
-        "gracefully — the earlier collect_list/array_sort "
-        "ObjectHashAggregate held every candidate array on heap). "
-        "`knn_join_grid_total` escalates the ring for the (shrinking) "
-        "uncertain remainder, done-flags fused into the same window "
-        "shuffle.",
+        "Exact grid kNN (no Python, no collect)", kg,
+        "`knn_join_grid_exact`, the `knn_sites_grid` path (same k=3, "
+        "res=5). The site side crosses the n×n cell grid with the "
+        "sites and keeps, per cell, only the sites whose min distance "
+        "to the cell does not exceed the k-th smallest max distance "
+        "(per-cell domination pruning): every dropped site is beaten by "
+        "k others for every point in the cell, so the pruned list holds "
+        "each point's true top-k. Points hash-partition by their cell "
+        "and equi-join the pruned list; the per-point top-k is a window "
+        "`row_number over (d2, site_id)`. Here the limited point side is "
+        "the smaller one, so Catalyst broadcasts it (`BuildLeft`) and "
+        "the window shuffles again on `(__cell, point_id)`; only when "
+        "the pruned site list is the broadcast side do the join and the "
+        "window run in place on the point shuffle.",
     )
     from spapy_spark.operators import overlay  # noqa: E402
     from spapy_spark.geometry import wkb as _wkb  # noqa: E402
